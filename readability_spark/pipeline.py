@@ -24,8 +24,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from .udfs import extract_udf, make_extract_udf
+from .schema import EXTRACT_SCHEMA
+from .udfs import make_extract_udf
 
 # Arrow rows/batch. Small batches matter enormously for UDF throughput:
 # with ~30KB HTML payloads, the default 10000-row batches serialize the
@@ -99,71 +101,62 @@ def n_buckets_for(spark: SparkSession, factor: int = 4) -> int:
     return max(1, spark.sparkContext.defaultParallelism * factor)
 
 
-def salt_and_partition(df: DataFrame, num_buckets: int) -> DataFrame:
-    """Add bucket_id = pmod(xxhash64(conv_id, turn_idx), N) and repartition.
+def bucket_id_col(num_buckets: int):
+    """Salt bucket of a turn: pmod(xxhash64(conv_id, turn_idx), N) as int.
 
-    Salting on (conv_id, turn_idx) — not conv_id alone — is what breaks the
+    The ONE definition of the salt: extraction (batch and streaming) tags
+    rows with it and ``resume_filter`` anti-joins on it, so any drift
+    between copies would silently drop rows on resume.  Salting on
+    (conv_id, turn_idx) — not conv_id alone — is what breaks the
     long-conversation skew the north rule calls out; it is safe because
-    extraction is stateless per turn.
-    """
-    df = df.withColumn(
-        "bucket_id",
-        F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(num_buckets))
-        .cast("int"))
-    return df.repartition(num_buckets, "bucket_id")
+    extraction is stateless per turn."""
+    return (F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(num_buckets))
+            .cast("int"))
 
 
-# octet_length(NULL) is NULL, which would drop null-text rows from BOTH
-# byte tiers — a NULL payload sizes as 0 and stays in the light tier
-def _payload_size():
-    return F.coalesce(F.octet_length("text"), F.lit(0))
+def salt_and_partition(df: DataFrame, num_buckets: int) -> DataFrame:
+    """Add ``bucket_id`` (see ``bucket_id_col``) and repartition on it."""
+    return (df.withColumn("bucket_id", bucket_id_col(num_buckets))
+            .repartition(num_buckets, "bucket_id"))
 
 
-def _whale_group_extract(df: DataFrame, pass_cols: list[str],
-                         group_keys: list[str], char_threshold: int,
-                         schema_src) -> DataFrame:
-    """Whale-tier extraction: singleton applyInPandas groups, where each
-    GROUP is the Arrow transfer unit — the python worker never stages
-    more than one whale (≤ MAX_HTML_BYTES) at a time.  ``pass_cols``
-    ride through unchanged (their StructFields come from ``schema_src``);
-    ``group_keys`` must make the groups singletons.  Shared by the salted
-    two-tier mode (grouped on (conv_id, turn_idx)) and the
-    content-addressed composition (grouped on the payload hash)."""
-    from pyspark.sql import types as T
+def _extract_tiers(light: DataFrame, heavy: DataFrame, pass_cols: list[str],
+                   group_keys: list[str], udf,
+                   whale_safe_bytes: int | None) -> DataFrame:
+    """Extract ``text`` into ``pass_cols`` + the EXTRACT_SCHEMA columns.
 
-    from .schema import EXTRACT_SCHEMA
-    from .udfs import _FIELDS, _extract_record, _to_frame
-
-    out_schema = T.StructType(
-        [schema_src[c] for c in pass_cols] + list(EXTRACT_SCHEMA.fields))
-
-    def _extract_group(pdf):
-        out = _to_frame(
-            [_extract_record(t, char_threshold) for t in pdf["text"]],
-            _FIELDS)
-        for i, c in enumerate(pass_cols):
-            out.insert(i, c, pdf[c].values)
+    ``whale_safe_bytes=None``: the scalar UDF over ``light``, nothing else
+    (``heavy`` is unused).  Otherwise rows under the threshold take the
+    scalar UDF over ``light`` and the rest of ``heavy`` go through
+    applyInPandas groups on ``group_keys`` — which must make the groups
+    singletons, so each GROUP is the Arrow transfer unit and the python
+    worker never stages more than one whale (≤ MAX_HTML_BYTES) at a time.
+    Both tiers run the same batch function, ``udf.func``; the closure
+    captures that plain function because the UDF wrapper does not
+    pickle."""
+    if whale_safe_bytes is not None:
+        # octet_length(NULL) is NULL, which would drop null-text rows from
+        # BOTH tiers — a NULL payload sizes as 0 and stays light
+        size = F.coalesce(F.octet_length("text"), F.lit(0))
+        light = light.filter(size < whale_safe_bytes)
+    out = light.withColumn("x", udf(F.col("text"))).select(*pass_cols, "x.*")
+    if whale_safe_bytes is None:
         return out
 
-    return df.groupBy(*group_keys).applyInPandas(
-        _extract_group, schema=out_schema)
+    batch = udf.func
 
+    def _extract_group(pdf):
+        rec = batch(pdf["text"])
+        for i, c in enumerate(pass_cols):
+            rec.insert(i, c, pdf[c].values)
+        return rec
 
-def _tiered_distinct_extract(distinct: DataFrame, udf, whale_safe_bytes: int,
-                             char_threshold: int) -> DataFrame:
-    """Byte-tier the distinct-payload table: light rows keep the 64-row
-    scalar-UDF path; whale rows go through singleton applyInPandas groups
-    keyed on the payload hash (one whale per Arrow transfer unit).  Both
-    tiers read the same distinct lineage — the dropDuplicates/repartition
-    exchange is reused, and the whale groupBy('_tkey') is satisfied by the
-    _tkey hash partitioning the distinct table already carries."""
-    size = _payload_size()
-    light = distinct.filter(size < whale_safe_bytes) \
-        .withColumn("x", udf(F.col("text"))).select("_tkey", "x.*")
-    heavy = _whale_group_extract(
-        distinct.filter(size >= whale_safe_bytes), ["_tkey"], ["_tkey"],
-        char_threshold, distinct.schema)
-    return light.unionByName(heavy)
+    schema = T.StructType(
+        [heavy.schema[c] for c in pass_cols] + EXTRACT_SCHEMA.fields)
+    whales = (heavy.filter(size >= whale_safe_bytes)
+              .groupBy(*group_keys)
+              .applyInPandas(_extract_group, schema=schema))
+    return out.unionByName(whales)
 
 
 def run_extraction(df: DataFrame, num_buckets: int | None = None,
@@ -172,34 +165,39 @@ def run_extraction(df: DataFrame, num_buckets: int | None = None,
                    dedup_payloads: bool = False) -> DataFrame:
     """transcripts → per-turn extraction results (flat columns).
 
-    Physical plan: Scan → Project(conv_id, turn_idx, role, text) →
-    Exchange(hash bucket_id) → ArrowEvalPython(extract_udf) → Project.
-    One shuffle total; the scan only reads the 4 needed columns.
+    One composition in four steps, the last two optional:
+
+    1. **Key** the rows: project (conv_id, turn_idx, role, text) — the
+       scan reads only those 4 columns — and tag each turn with its salt
+       ``bucket_id`` (plus the payload key ``_tkey`` when deduplicating).
+    2. **Distinct payloads** (``dedup_payloads``): otherwise the keyed
+       rows are repartitioned on ``bucket_id``.
+    3. **Byte tiers** (``whale_safe_bytes``): see ``_extract_tiers``.
+    4. **Extract** with one scalar pandas UDF (``make_extract_udf``).
+
+    Default plan: Scan → Project → Exchange(hash bucket_id) →
+    ArrowEvalPython(extract_udf) → Project.  One shuffle total.
 
     ``whale_safe_bytes``: Arrow input batches for a scalar pandas UDF are
     sliced by RECORD COUNT only (Spark 4.1 honors maxBytesPerBatch solely in
     the transformWithState serializers), so with the default 64-row batch a
     pathological run of 8 MB-cap documents could stage a ~512 MB batch in
-    the python worker.  Setting this threshold splits extraction into two
-    tiers with HARD per-batch byte bounds:
-
-    - light rows (< threshold) keep the 64-row scalar-UDF path, bounding a
-      batch at 64×threshold bytes (64 MB at the 1 MB default threshold);
-    - whale rows are grouped by (conv_id, turn_idx) — singleton groups —
-      through applyInPandas, where each GROUP is the transfer unit, so the
-      worker never stages more than one whale (≤ MAX_HTML_BYTES) at a
-      time.  The whale tier shuffles only its own (rare) rows and skips
-      the salt exchange entirely (bucket_id rides along as a column; the
-      grouping exchange already randomizes placement).
-
-    Cost honesty: the size predicate is not expressible against parquet
-    footer stats, so the two tiers are two scans of the source.  This mode
-    is therefore OPT-IN for corpora where whales actually occur; the
-    default None keeps the measured single-tier / single-shuffle plan,
-    where whale damage is already capped by MAX_HTML_BYTES truncation.
-    (The single-scan alternative — persisting the salted exchange — trades
-    the rescan for materializing the full corpus in executor storage;
-    at 100 TB the rescan is the cheaper side of that trade.)
+    the python worker.  Setting this threshold gives HARD per-batch byte
+    bounds: light rows (< threshold) keep the 64-row scalar-UDF path,
+    bounding a batch at 64×threshold bytes (64 MB at a 1 MB threshold);
+    whale rows go through singleton applyInPandas groups keyed on
+    (conv_id, turn_idx), one whale per transfer unit.  The whale tier
+    shuffles only its own (rare) rows and skips the salt exchange
+    entirely (bucket_id rides along as a column; the grouping exchange
+    already randomizes placement).  Cost honesty: the size predicate is
+    not expressible against parquet footer stats, so the two tiers are
+    two scans of the source.  The mode is therefore OPT-IN for corpora
+    where whales actually occur; the default keeps the single-tier /
+    single-shuffle plan, where whale damage is already capped by
+    MAX_HTML_BYTES truncation.  (The single-scan alternative — persisting
+    the salted exchange — trades the rescan for materializing the full
+    corpus in executor storage; at 100 TB the rescan is the cheaper side
+    of that trade.)
 
     ``dedup_payloads``: extraction is a pure function of the text, and
     real transcript corpora are duplicate-heavy (boilerplate pages,
@@ -215,68 +213,41 @@ def run_extraction(df: DataFrame, num_buckets: int | None = None,
     model: replaces the salt exchange with a dropDuplicates shuffle
     keyed on the payload hash plus a join of the corpus against the
     extracted-distinct table — pays off when the duplicate factor beats
-    the extra shuffle, which at 10^12 turns of crawl-derived transcripts
-    it overwhelmingly does.  The salt's skew job is done by
-    hash-of-payload partitioning here; AQE splits any hot key.  Opt-in
-    because a genuinely all-unique corpus pays ~2× shuffle for nothing.
+    the extra shuffle.  The salt's skew job is done by hash-of-payload
+    partitioning here; AQE splits any hot key.  Opt-in because a
+    genuinely all-unique corpus pays ~2× shuffle for nothing.
 
-    COMPOSES with ``whale_safe_bytes`` — the two corpus pathologies
-    (duplicate-heavy AND whale-bearing) co-occur in real crawl data:
-    the distinct table is built first (collapsing repeated whales to
-    one row each), then the distinct RESIDUE is byte-tiered exactly as
-    above, with singleton applyInPandas groups keyed on the payload
-    hash.  Price of the composition: the light and whale tiers are two
-    passes over the distinct table's lineage (the dropDuplicates
-    exchange is reused across them), plus the whale tier's grouping —
-    which re-uses the _tkey hash partitioning the distinct table
-    already has, so whale rows pay no additional exchange.
+    The two modes COMPOSE — duplicate-heavy and whale-bearing corpora
+    co-occur in real crawl data: the distinct table is built first
+    (collapsing repeated whales to one row each), then its residue is
+    byte-tiered with singleton groups keyed on ``_tkey``.  Both tiers
+    read the distinct table's lineage (its exchanges are reused), and
+    the whale groupBy('_tkey') is satisfied by the _tkey partitioning
+    the distinct table already carries, so whale rows pay no additional
+    exchange: at most 3 shuffles in all (dedup, repartition, and the
+    record side of the join).
     """
     if num_buckets is None:
         num_buckets = n_buckets_for(df.sparkSession)
-    udf = extract_udf if char_threshold == 500 else make_extract_udf(char_threshold)
+    udf = make_extract_udf(char_threshold)
     cols = [c for c in ("conv_id", "turn_idx", "role") if c in df.columns]
+    keyed = df.select(*cols, "text")
     if dedup_payloads:
-        keyed = df.select(*cols, "text").withColumn(
+        keyed = keyed.withColumn(
             "_tkey", F.sha2(F.coalesce(F.col("text"), F.lit("")), 256))
-        distinct = (keyed.select("_tkey", "text")
-                    .dropDuplicates(["_tkey"])
-                    .repartition(num_buckets, "_tkey"))
-        if whale_safe_bytes is None:
-            extracted = distinct.withColumn("x", udf(F.col("text"))) \
-                .select("_tkey", "x.*")
-        else:
-            extracted = _tiered_distinct_extract(
-                distinct, udf, whale_safe_bytes, char_threshold)
-        return (
-            keyed.withColumn(
-                "bucket_id",
-                F.pmod(F.xxhash64("conv_id", "turn_idx"),
-                       F.lit(num_buckets)).cast("int"))
-            .join(extracted, "_tkey")
-            .select(*cols, "bucket_id",
-                    *[f for f in extracted.columns if f != "_tkey"]))
-    salted = salt_and_partition(df.select(*cols, "text"), num_buckets)
-    if whale_safe_bytes is None:
-        return salted.withColumn("x", udf(F.col("text"))).select(
-            *cols, "bucket_id", "x.*")
-
-    size = _payload_size()
-    light_out = salted.filter(size < whale_safe_bytes) \
-        .withColumn("x", udf(F.col("text"))).select(*cols, "bucket_id", "x.*")
-
-    # whale tier: no salt repartition (the groupBy exchange is the only
-    # shuffle these rows need); bucket_id is computed as a plain column so
-    # lineage/metrics stay uniform across tiers
-    heavy = (df.select(*cols, "text")
-             .filter(size >= whale_safe_bytes)
-             .withColumn(
-                 "bucket_id",
-                 F.pmod(F.xxhash64("conv_id", "turn_idx"),
-                        F.lit(num_buckets)).cast("int")))
-    heavy_out = _whale_group_extract(
-        heavy, [*cols, "bucket_id"], ["conv_id", "turn_idx"],
-        char_threshold, salted.schema)
-    return light_out.unionByName(heavy_out)
+    keyed = keyed.withColumn("bucket_id", bucket_id_col(num_buckets))
+    if not dedup_payloads:
+        return _extract_tiers(
+            keyed.repartition(num_buckets, "bucket_id"), keyed,
+            [*cols, "bucket_id"], ["conv_id", "turn_idx"], udf,
+            whale_safe_bytes)
+    distinct = (keyed.select("_tkey", "text")
+                .dropDuplicates(["_tkey"])
+                .repartition(num_buckets, "_tkey"))
+    extracted = _extract_tiers(distinct, distinct, ["_tkey"], ["_tkey"], udf,
+                               whale_safe_bytes)
+    return (keyed.join(extracted, "_tkey")
+            .select(*cols, "bucket_id", *EXTRACT_SCHEMA.fieldNames()))
 
 
 def derive_metrics(results: DataFrame, attempt: int = 1,
@@ -329,11 +300,8 @@ def resume_filter(df: DataFrame, metrics: DataFrame,
     no shuffle of the big side beyond the salt repartition it needs anyway.
     """
     done = metrics.filter(F.col("status") == "ok").select("bucket_id").distinct()
-    salted = df.withColumn(
-        "bucket_id",
-        F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(num_buckets))
-        .cast("int"))
-    return salted.join(F.broadcast(done), "bucket_id", "left_anti")
+    return (df.withColumn("bucket_id", bucket_id_col(num_buckets))
+            .join(F.broadcast(done), "bucket_id", "left_anti"))
 
 
 def _is_path_missing(e: Exception) -> bool:

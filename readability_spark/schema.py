@@ -12,8 +12,8 @@ from pyspark.sql import types as T
 # per-turn extraction result (projection of readability_core.extract()).
 # Layout choices are throughput-driven: links travel as two parallel
 # array<string> columns (a list-of-struct column costs ~3× in pandas→Arrow
-# conversion), and extracted_html is opt-in via make_extract_udf(
-# include_html=True) — it is the largest string and recomputable.
+# conversion), and extracted_html is left out — it is the largest string
+# and recomputable from the source.
 EXTRACT_SCHEMA = T.StructType([
     T.StructField("page_type", T.StringType()),
     T.StructField("page_type_v2", T.StringType()),       # improved classifier
@@ -32,7 +32,7 @@ EXTRACT_SCHEMA = T.StructType([
     T.StructField("link_texts", T.ArrayType(T.StringType())),
     T.StructField("n_links", T.IntegerType()),
     # YAML-ish ARIA snapshot (reference builds the tree on every extract;
-    # computation is skippable via make_extract_udf(include_aria=False),
+    # the UDF computes it only under make_extract_udf(include_aria=True),
     # columns stay for schema stability)
     T.StructField("aria_tree", T.StringType()),
     T.StructField("aria_node_count", T.IntegerType()),
@@ -42,10 +42,6 @@ EXTRACT_SCHEMA = T.StructType([
     T.StructField("span_end", T.IntegerType()),
     T.StructField("error", T.StringType()),
 ])
-
-# EXTRACT_SCHEMA + extracted_html (opt-in)
-EXTRACT_SCHEMA_HTML = T.StructType(
-    EXTRACT_SCHEMA.fields + [T.StructField("extracted_html", T.StringType())])
 
 # input transcript table (BASELINE.json input_hint)
 TRANSCRIPT_SCHEMA = T.StructType([
@@ -70,21 +66,4 @@ NODE_SCHEMA = T.StructType([
     T.StructField("text", T.StringType()),
     T.StructField("depth", T.IntegerType()),
     T.StructField("ord", T.IntegerType()),          # document order
-])
-
-# per-partition lineage/metrics row (north rule: checkpoint-resume)
-METRICS_SCHEMA = T.StructType([
-    T.StructField("bucket_id", T.IntegerType()),
-    T.StructField("n_turns", T.LongType()),
-    T.StructField("n_articles", T.LongType()),
-    T.StructField("n_errors", T.LongType()),
-    T.StructField("sum_node_count", T.LongType()),
-    T.StructField("sum_char_yield", T.LongType()),
-    T.StructField("avg_top_score", T.DoubleType()),
-    T.StructField("conv_id_min", T.StringType()),
-    T.StructField("conv_id_max", T.StringType()),
-    T.StructField("status", T.StringType()),     # ok | failed (all-error)
-    T.StructField("attempt", T.IntegerType()),
-    T.StructField("n_buckets", T.IntegerType()),  # salt modulus of the run;
-                                                  # resume pins to it
 ])

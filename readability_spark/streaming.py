@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .pipeline import bucket_id_col
 from .schema import TRANSCRIPT_SCHEMA
 from .udfs import extract_udf
 
@@ -51,10 +52,7 @@ def stream_extract(transcripts: DataFrame, num_buckets: int = 32) -> DataFrame:
     stateful exchange per microbatch; instead the salt travels as a column
     and the downstream sink partitions on it.
     """
-    salted = transcripts.withColumn(
-        "bucket_id",
-        F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(num_buckets))
-        .cast("int"))
+    salted = transcripts.withColumn("bucket_id", bucket_id_col(num_buckets))
     return salted.withColumn("x", extract_udf(F.col("text"))).select(
         "conv_id", "turn_idx", "bucket_id", "ts", "x.*")
 

@@ -27,18 +27,15 @@ from readability_core import extract as _extract_one
 from readability_core.preprocess import preprocess_document
 from readability_core.vdom import parse_html
 
-from .schema import EXTRACT_SCHEMA, EXTRACT_SCHEMA_HTML, NODE_SCHEMA
+from .schema import EXTRACT_SCHEMA, NODE_SCHEMA
 
 _FIELDS = [f.name for f in EXTRACT_SCHEMA.fields]
 
 
-def _extract_record(html, char_threshold: int = 500,
-                    build_aria: bool = False, parser=None,
-                    forced_page_type=None) -> dict:
+def _extract_record(html, char_threshold: int, build_aria: bool) -> dict:
     try:
         rec = _extract_one(html, char_threshold=char_threshold,
-                           build_aria=build_aria, parser=parser,
-                           forced_page_type=forced_page_type)
+                           build_aria=build_aria)
         links = rec["links"]
         rec["link_hrefs"] = [l["href"] for l in links]
         rec["link_texts"] = [l["text"] for l in links]
@@ -48,7 +45,7 @@ def _extract_record(html, char_threshold: int = 500,
             page_type="other", page_type_v2="other",
             article_possibility=0.0, title="", byline=None, lang=None,
             site_name=None, extracted_text="", extracted_md="",
-            extracted_html="", node_count=0, top_score=0.0,
+            node_count=0, top_score=0.0,
             candidate_scores=[], n_candidates=0, link_hrefs=[],
             link_texts=[], n_links=0, aria_tree="", aria_node_count=0,
             body_text_len=0, char_yield=0, span_start=-1, span_end=-1,
@@ -60,39 +57,29 @@ def _to_frame(records: list, fields: list) -> pd.DataFrame:
     return pd.DataFrame({f: [r[f] for r in records] for f in fields})
 
 
-@pandas_udf(EXTRACT_SCHEMA)
-def extract_udf(texts: pd.Series) -> pd.DataFrame:
+def make_extract_udf(char_threshold: int = 500, include_aria: bool = False):
     """Scalar pandas UDF: HTML series → extraction struct (one per turn).
 
-    Fast path: the ARIA snapshot is NOT computed (columns stay, empty) —
-    it costs ~68% extra CPU; opt in via make_extract_udf(include_aria=True)
-    for full reference-extract() parity."""
-    return _to_frame([_extract_record(t) for t in texts], _FIELDS)
+    ``char_threshold`` is a job parameter — reference defaults differ by
+    entry point: 500 lib / 250 CLI / 100 MCP (src/constants.ts:15,
+    cli.js:168, src/mcp-server.ts:27).  The ARIA snapshot is NOT computed
+    by default (its columns stay, empty) — it costs ~68% extra CPU;
+    ``include_aria=True`` gives full reference-extract() parity.
 
+    The batch function is reachable as ``.func`` (a plain, picklable
+    pandas function); the whale tier of ``run_extraction`` calls it inside
+    applyInPandas groups so both tiers run the same code."""
 
-def make_extract_udf(char_threshold: int = 500, include_html: bool = False,
-                     include_aria: bool = False, parser=None,
-                     forced_page_type=None):
-    """extract_udf with a non-default charThreshold (job parameter —
-    reference defaults differ by entry point: 500 lib / 250 CLI / 100 MCP,
-    src/constants.ts:15, cli.js:168, src/mcp-server.ts:27), the
-    extracted_html column, and/or the ARIA snapshot computed.
-
-    ``parser`` / ``forced_page_type`` mirror createExtractor
-    (extract.ts:866-890): a pluggable (html, base_uri) -> VDocument parser
-    — it must be cloudpickle-serializable, since it ships to executors
-    inside the UDF closure — and a classification override."""
-    schema = EXTRACT_SCHEMA_HTML if include_html else EXTRACT_SCHEMA
-    fields = [f.name for f in schema.fields]
-
-    @pandas_udf(schema)
-    def _udf(texts: pd.Series) -> pd.DataFrame:
+    @pandas_udf(EXTRACT_SCHEMA)
+    def extract_udf(texts: pd.Series) -> pd.DataFrame:
         return _to_frame(
-            [_extract_record(t, char_threshold, include_aria, parser,
-                             forced_page_type) for t in texts],
-            fields)
+            [_extract_record(t, char_threshold, include_aria) for t in texts],
+            _FIELDS)
 
-    return _udf
+    return extract_udf
+
+
+extract_udf = make_extract_udf()
 
 
 from pyspark.sql import types as T  # noqa: E402

@@ -75,6 +75,13 @@ def test_md5_prefix_int_fast_equals_instr_chain(spark):
             .count() == 0, (nhex, start)
 
 
+def test_md5_prefix_int_fast_rejects_widths_past_bigint():
+    from readability_spark.ops.common import md5_prefix_int_fast_expr
+
+    with pytest.raises(ValueError):
+        md5_prefix_int_fast_expr("s", nhex=16)
+
+
 def test_simhash_conv_form_equals_instr_form(spark):
     """The conv-word + shift/and + 2*b>n simhash equals the r7
     per-bit instr/substr ±1-sum form on the real corpus."""

@@ -75,6 +75,32 @@ def test_udf_full_parity_with_aria_on_sample(spark, fixture_turns):
         assert row["aria_node_count"] == exp["aria_node_count"], row["conv_id"]
 
 
+def test_extract_udf_batch_survives_a_raising_row(monkeypatch):
+    """A row whose core extraction raises degrades to an ``exception:``
+    record; the rest of the batch still extracts (no Spark needed)."""
+    import pandas as pd
+
+    from readability_spark import udfs
+    from readability_spark.schema import EXTRACT_SCHEMA
+
+    def flaky(html, **kw):
+        if html == "boom":
+            raise RuntimeError("bad row")
+        return plain_extract(html, **kw)
+
+    monkeypatch.setattr(udfs, "_extract_one", flaky)
+    page = "<html><body><article><p>" + "word, " * 60 + "</p></article>"
+    out = extract_udf.func(pd.Series([page, "boom", None]))
+    assert list(out.columns) == EXTRACT_SCHEMA.fieldNames()
+    assert len(out) == 3
+    assert [e for e in out["error"]
+            if e and e.startswith("exception:")] == ["exception:RuntimeError"]
+    assert out["error"][1] == "exception:RuntimeError"
+    healthy = plain_extract(page, build_aria=False)
+    assert healthy["extracted_text"]
+    assert out["extracted_text"][0] == healthy["extracted_text"]
+
+
 def test_sql_registered_udf_surface(spark):
     """SQL users can call the engine directly (SURVEY.md §2.13)."""
     from readability_spark.udfs import register_udfs
@@ -265,6 +291,11 @@ def test_metrics_and_resume(spark):
     assert remaining.count() > 0
     assert set(r["bucket_id"] for r in remaining.select("bucket_id")
                .distinct().collect()) == {0}
+    # resume_filter salts every turn exactly as run_extraction did
+    key = ("conv_id", "turn_idx", "bucket_id")
+    assert {tuple(r) for r in resume_filter(df, metrics.limit(0), 4)
+            .select(*key).collect()} == \
+        {tuple(r) for r in out.select(*key).collect()}
 
 
 def test_explode_nodes_adjacency(spark):

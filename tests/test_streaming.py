@@ -5,6 +5,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from readability_spark.pipeline import resume_filter
 from readability_spark.streaming import (
     run_stream,
     stream_conversation_stats,
@@ -36,6 +37,12 @@ def test_stream_extract_end_to_end(spark, stream_dirs):
     assert out.count() == n_in
     assert "page_type" in out.columns and "bucket_id" in out.columns
     assert out.filter(F.col("page_type") == "article").count() > 0
+    # the streamed salt is the one resume_filter anti-joins on
+    key = ("conv_id", "turn_idx", "bucket_id")
+    none_done = spark.createDataFrame([], "bucket_id int, status string")
+    salted = resume_filter(spark.read.parquet(stream_dirs["in"]), none_done, 8)
+    assert {tuple(r) for r in salted.select(*key).collect()} == \
+        {tuple(r) for r in out.select(*key).collect()}
 
 
 def test_stream_restart_is_exactly_once(spark, stream_dirs):

@@ -12,7 +12,8 @@ measured 64-row scalar path.  These tests pin:
 - plan shape: whale tier is FlatMapGroupsInPandas with ONLY its grouping
   exchange (no salt repartition of whale rows), light tier keeps
   ArrowEvalPython;
-- the end-to-end pipeline (write + metrics + resume) accepts the mode.
+- the end-to-end pipeline (write + metrics + resume) accepts the mode;
+- a non-default char_threshold reaches both tiers of every mode.
 """
 
 import os
@@ -22,6 +23,7 @@ import pytest
 from readability_core import extract as extract_plain
 from readability_core.extract import MAX_HTML_BYTES
 from readability_spark.pipeline import run_extraction, run_pipeline
+from readability_spark.schema import EXTRACT_SCHEMA
 
 WHALE = ("<html><body><article>" +
          "<p>whale paragraph with enough text to score " + "x" * 4096 +
@@ -29,6 +31,18 @@ WHALE = ("<html><body><article>" +
 LIGHT = ("<html><body><article><p>light doc body with some real text to "
          "extract</p></article></body></html>")
 GIANT = "<p>" + "y" * (MAX_HTML_BYTES + 1024) + "</p>"        # > 8 MB cap
+# 35 links over little body text: "other" at char_threshold=500, but at
+# 100 the top candidate is long enough to classify as an article.  The
+# padded copy is the same page past the 100 KB whale threshold, so both
+# tiers get a page whose result depends on the threshold.
+THRESHOLD_PAGE = (
+    "<html><body><div><p>" +
+    ("mid-size body text, with commas, and more words here. " * 5)[:220] +
+    "</p></div><div>" +
+    "".join(f"<a href='/p{i}'>l{i}</a> " for i in range(35)) +
+    "</div></body></html>")
+THRESHOLD_WHALE = THRESHOLD_PAGE.replace(
+    "<body>", "<body><!--" + "pad " * 30_000 + "-->")
 
 
 @pytest.fixture(scope="module")
@@ -61,6 +75,35 @@ def test_two_tier_equals_single_tier_and_plain(spark, corpus):
         assert got["extracted_md"] == rec["extracted_md"]
         assert got["error"] == rec["error"]
     assert two[("convg", 7777)]["error"] == "truncated:max_html_bytes"
+
+
+@pytest.mark.parametrize("mode", [
+    {}, {"whale_safe_bytes": 100_000}, {"dedup_payloads": True},
+    {"dedup_payloads": True, "whale_safe_bytes": 100_000},
+], ids=["default", "whale", "dedup", "dedup_whale"])
+def test_char_threshold_udf_equals_plain(spark, corpus, mode):
+    """Every mode ≡ plain extract(char_threshold=100, build_aria=False),
+    field for field, on every turn — both tiers honour the threshold."""
+    df = corpus.unionByName(spark.createDataFrame(
+        [("convt", 9998, "assistant", THRESHOLD_WHALE),
+         ("convt", 9999, "assistant", THRESHOLD_PAGE)], corpus.schema))
+    got = _by_key(run_extraction(df, num_buckets=8, char_threshold=100,
+                                 **mode).collect())
+    texts = {(r["conv_id"], r["turn_idx"]): r["text"] for r in df.collect()}
+    assert set(got) == set(texts)
+    plain = {}
+    for key, html in texts.items():
+        if html not in plain:
+            rec = extract_plain(html, char_threshold=100, build_aria=False)
+            rec["link_hrefs"] = [l["href"] for l in rec["links"]]
+            rec["link_texts"] = [l["text"] for l in rec["links"]]
+            plain[html] = rec
+        for f in EXTRACT_SCHEMA.fieldNames():
+            assert got[key][f] == plain[html][f], (key, f)
+    assert got[("convt", 9998)]["page_type"] == "article"
+    assert got[("convt", 9999)]["page_type"] == "article"
+    assert extract_plain(THRESHOLD_PAGE, build_aria=False)["page_type"] \
+        == "other"
 
 
 def test_whale_plan_shape(spark, corpus):
