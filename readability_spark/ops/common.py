@@ -114,9 +114,31 @@ def ngram_zip_parts(n: int, arr: str = "toks",
     ``size(arr) >= n`` pre-filters redundant — short arrays simply emit
     no complete-gram rows — so callers drop them, removing a cloned
     tokenize from the pushed-down scan filter."""
+    # The field references lean on Spark's generated arrays_zip field
+    # names: a bare column argument keeps its own name (``z.toks``) and
+    # each slice(...) expression is named by its argument position
+    # (``z.`1```, ``z.`2``` …).  Spark does not document that naming; if
+    # an upgrade changes it, the gram column breaks or goes NULL, and the
+    # zip ≡ transform equivalence tests in test_r08_optimizations are the
+    # canary that fails first.
     parts = [arr] + [f"slice({arr}, {j + 1}, size({arr}))"
                      for j in range(1, n)]
     fields = [f"{z}.{arr}"] + [f"{z}.`{j}`" for j in range(1, n)]
     return (f"arrays_zip({', '.join(parts)})",
             f"concat_ws(' ', {', '.join(fields)})",
             fields[-1])
+
+
+def sorted_id_pairs(groups: DataFrame, arr: str, a: str,
+                    b: str) -> DataFrame:
+    """Every i<j pair of each row's sorted id array column ``arr``, as
+    (``a``, ``b``) rows with a < b — the candidate-pair expansion of
+    single-lineage bucket grouping (group the ids of a bucket into one
+    sorted array, expand in-row): no self-join, so the lineage that
+    computed the bucket keys runs exactly once.  Duplicates across groups
+    are the caller's to drop."""
+    expand = (f"flatten(transform({arr}, (x, i) -> "
+              f"transform(slice({arr}, i + 2, size({arr})), "
+              f"y -> struct(x AS {a}, y AS {b}))))")
+    return (groups.select(F.explode(F.expr(expand)).alias("p"))
+            .select(f"p.{a}", f"p.{b}"))

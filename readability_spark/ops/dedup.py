@@ -25,8 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .common import (SQL_TOKENS, md5_prefix_int_expr,
-                     md5_prefix_int_fast_expr, ngram_zip_parts, table,
-                     tokens_col)
+                     md5_prefix_int_fast_expr, ngram_zip_parts,
+                     sorted_id_pairs, table, tokens_col)
 
 _LOG = logging.getLogger(__name__)
 
@@ -233,15 +233,7 @@ def _band_pairs(sig: DataFrame) -> DataFrame:
         .agg(F.array_sort(F.collect_set("doc_id")).alias("ds"))
         .filter((F.size("ds") >= 2) & (F.size("ds") <= LSH_BUCKET_CAP))
     )
-    pair_expr = (
-        "flatten(transform(ds, (x, i) -> "
-        "transform(slice(ds, i + 2, size(ds)), "
-        "y -> struct(x AS doc_a, y AS doc_b))))")
-    return (
-        buckets.select(F.explode(F.expr(pair_expr)).alias("p"))
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
-    )
+    return sorted_id_pairs(buckets, "ds", "doc_a", "doc_b").distinct()
 
 
 def lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -547,6 +539,12 @@ def _connected_components(pairs: DataFrame) -> tuple[DataFrame, int]:
                 "rep")
             .select("doc_id", F.col("rep2").alias("rep"))
             .localCheckpoint(eager=False))
+        # This limit(1).count() is the action that materializes the LAZY
+        # checkpoint of new_labels, and a limit may stop before computing
+        # every partition.  That is safe: after the job, Spark's
+        # LocalRDDCheckpointData.doCheckpoint runs a backfill job over the
+        # partitions not yet cached before it truncates the lineage, so
+        # the checkpoint the next round reads is complete.
         changed = (new_labels.join(labels.withColumnRenamed("rep", "old"),
                                    "doc_id")
                    .filter(F.col("rep") != F.col("old")).limit(1).count())

@@ -1,30 +1,50 @@
 """Similarity search over the ``embeddings`` table (array<float> column).
 
-- ``cosine_topk``: brute-force exact top-k — the baseline verifier.  The dot
-  product runs JVM-side via ``aggregate(zip_with(...))`` higher-order
-  functions (no Python), queries are a broadcast cross join.
-- ``lsh_cosine_topk``: the scale path — random-hyperplane (sign-LSH)
-  bucketing; candidates share a hyperplane signature, exact cosine re-ranks
-  inside buckets only.  At 10^9 vectors the bucket join replaces the
-  all-pairs cross product.
+All eight operators are one skeleton — candidates → verify → rank:
 
-Outputs are (query_id, rank, neighbor_id) — integers only — but the ranks
-derive from float comparisons, so the oracle must compute bit-identical
-cosines: the SQL spells the dot/norm sums as explicit left-associative
-+-chains over double-cast elements, the same order as Spark's aggregate()
-fold (x+0.0 == x exactly, so dropping the fold's zero seed is safe).  A
+1. **Candidates** come from one of three generators:
+   - brute force: the tiny query set broadcast-cross-joined onto the
+     corpus (``cosine_topk``, the exact baseline every ANN path is
+     measured against);
+   - a bucket join: md5-seeded sign-LSH signatures, the query side
+     fanned out over a probe-mask list — the own bucket
+     (``lsh_cosine_topk``), plus the one-bit flips
+     (``lsh_multiprobe_topk``), or Hamming ≤ 2 over L=4 independent
+     tables (``lsh_bandor_topk``); ``embedding_near_dup`` groups the
+     same banded buckets corpus-side and expands i<j pairs in-row
+     (``common.sorted_id_pairs``, no self-join);
+   - a probed quantizer: fixed-id seed centroids sharpened by one Lloyd
+     iteration (``_quantizer``); queries probe their nearest lists
+     (``ivf_topk``, ``ivf_topk_sampled``) and ``semdedup`` pairs vectors
+     inside each cell.
+2. **Verify**: exact cosine over per-vector norms computed once
+   (``_side`` projections, ``_verify`` joins, ``_with_cosine_pre``).
+3. **Rank**: per-query row_number over (cos DESC, id ASC), top TOP_K
+   (``_rank_topk``); the dedup operators threshold the rounded cosine
+   instead.
+
+The dot product runs JVM-side via ``aggregate(zip_with(...))``
+higher-order functions (no Python).  The ANN outputs are
+(query_id, rank, neighbor_id) — integers only — but the ranks derive
+from float comparisons, so the oracle must compute bit-identical cosines:
+the SQL spells the dot/norm sums as explicit left-associative +-chains
+over double-cast elements, the same order as Spark's aggregate() fold
+(x+0.0 == x exactly, so dropping the fold's zero seed is safe).  A
 library cosine (list_cosine_similarity) could differ in the last ulp and
-flip near-tied ranks between engines.
+flip near-tied ranks between engines.  Each oracle mirrors its operator's
+skeleton with the same shared pieces (``_rank_tail_sql``,
+``_assign_cte_sql``, ``_banded_sql``).
 """
 
 from __future__ import annotations
 
 import math
+from itertools import combinations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .common import table
+from .common import sorted_id_pairs, table
 
 N_QUERIES = 5
 TOP_K = 5
@@ -60,25 +80,70 @@ def _with_cosine_pre(joined: DataFrame) -> DataFrame:
         "cos", F.expr(_DOT) / (F.col("na") * F.col("nb")))
 
 
+def _dim_guard(dim: int, value: str) -> str:
+    """``value`` if the row's embedding is at least ``dim`` wide, else a
+    loud failure.  Out-of-range v[i] is NULL (ANSI off), which would
+    silently collapse every vector into bucket 0 (turning a bucketed join
+    into an all-pairs cross product) or NULL-pad every cosine it touches
+    (zip_with), ranking confident garbage.  The guard lives INSIDE the
+    value expression so column pruning can't drop it."""
+    return (f"if(size(embedding) >= {dim}, {value}, "
+            f"raise_error('embedding narrower than dim={dim}'))")
+
+
+def _guarded(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The embeddings table with the dim guard riding its vector column."""
+    return table(spark, sf_dir, "embeddings").withColumn(
+        "embedding", F.expr(_dim_guard(EMB_DIM, "embedding")))
+
+
+def _side(emb: DataFrame, ident: str, vec: str, norm: str) -> DataFrame:
+    """One side of an exact-cosine join: vec_id → ``ident``, embedding →
+    ``vec`` and its norm, computed once per vector, → ``norm``."""
+    return emb.select(F.col("vec_id").alias(ident),
+                      F.col("embedding").alias(vec),
+                      _norm_col("embedding").alias(norm))
+
+
+def _queries(emb: DataFrame) -> DataFrame:
+    return _side(emb.filter(F.col("vec_id") < N_QUERIES),
+                 "query_id", "a", "na")
+
+
+def _corpus(emb: DataFrame) -> DataFrame:
+    return _side(emb, "neighbor_id", "b", "nb")
+
+
+def _verify(cand: DataFrame, a: DataFrame, b: DataFrame) -> DataFrame:
+    """Verify step: attach both vectors (and norms) to candidate id pairs
+    — each side joins on its own id column, its first — and score the
+    exact cosine."""
+    return _with_cosine_pre(
+        cand.join(a, a.columns[0]).join(b, b.columns[0]))
+
+
+def _top_per_query(scored: DataFrame, item: str, k: int,
+                   rank: str) -> DataFrame:
+    """(query_id, ``rank``, ``item``) for each query's ``k`` best items
+    by (cos DESC, item ASC) — a partitioned window, so Catalyst's
+    WindowGroupLimit prunes each partition to k rows before the sort."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc(item))
+    return (scored.withColumn(rank, F.row_number().over(w))
+            .filter(F.col(rank) <= k)
+            .select("query_id", rank, item))
+
+
+def _rank_topk(scored: DataFrame) -> DataFrame:
+    """Rank step of every ANN operator: top TOP_K neighbors per query."""
+    return (_top_per_query(scored, "neighbor_id", TOP_K, "rank")
+            .orderBy("query_id", "rank"))
+
+
 def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("a"),
-        _norm_col("embedding").alias("na"))
-    corpus = emb.select(F.col("vec_id").alias("neighbor_id"),
-                        F.col("embedding").alias("b"),
-                        _norm_col("embedding").alias("nb"))
     # queries are tiny → broadcast; corpus streams through unshuffled
-    joined = corpus.crossJoin(F.broadcast(queries))
-    scored = _with_cosine_pre(joined)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "neighbor_id")
-        .orderBy("query_id", "rank")
-    )
+    return _rank_topk(_with_cosine_pre(
+        _corpus(emb).crossJoin(F.broadcast(_queries(emb)))))
 
 
 def _dot_chain_sql(x: str, y: str, dim: int) -> str:
@@ -95,6 +160,24 @@ def _cos_sql(x: str, y: str, dim: int) -> str:
             f"sqrt({_dot_chain_sql(y, y, dim)})))")
 
 
+_SCORED_RANK_SQL = """SELECT query_id, neighbor_id,
+         row_number() OVER (PARTITION BY query_id
+                            ORDER BY cos DESC, neighbor_id ASC) AS rank
+  FROM scored"""
+
+
+def _rank_tail_sql(ranked: str = _SCORED_RANK_SQL) -> str:
+    """Oracle rank step: the ``ranked`` CTE (by default over a ``scored``
+    CTE of (query_id, neighbor_id, cos)) and the final top-k SELECT."""
+    return f"""), ranked AS (
+  {ranked}
+)
+SELECT query_id, rank, neighbor_id
+FROM ranked WHERE rank <= {TOP_K}
+ORDER BY query_id, rank
+"""
+
+
 def _cosine_topk_sql() -> str:
     return f"""
 WITH q AS (
@@ -104,21 +187,12 @@ WITH q AS (
   SELECT q.query_id, e.vec_id AS neighbor_id,
          {_cos_sql('q.a', 'e.embedding', EMB_DIM)} AS cos
   FROM embeddings e CROSS JOIN q
-), ranked AS (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cos DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, rank, neighbor_id
-FROM ranked WHERE rank <= {TOP_K}
-ORDER BY query_id, rank
-"""
+{_rank_tail_sql()}"""
 
 
 COSINE_TOPK_SQL = _cosine_topk_sql()
 
-# --- sign-LSH bucketed variant (scale path; exact DuckDB oracle) -------------
+# --- sign-LSH bucket join: single probe and multiprobe (exact oracles) -------
 
 N_PLANES = 8
 
@@ -141,68 +215,80 @@ def _plane_sig_expr(dim: int, base: int = 0) -> str:
     return " + ".join(bits)
 
 
-def lsh_cosine_topk(spark: SparkSession, sf_dir: str,
-                    dim: int = EMB_DIM) -> DataFrame:
+def _probe_masks(radius: int) -> list[int]:
+    """XOR masks of every signature within Hamming ``radius`` of a bucket,
+    nearest first: 0 (the bucket itself), the 8 one-bit flips, then the
+    28 two-bit flips — 1, 9 and 37 probes for radius 0, 1 and 2."""
+    return [sum(1 << p for p in flips) for r in range(radius + 1)
+            for flips in combinations(range(N_PLANES), r)]
+
+
+def _probe_unnest_sql(masks: list[int]) -> str:
+    """Oracle probe fan-out: one row per masked bucket (masks[0] is 0)."""
+    flips = ", ".join(f"xor(bucket, {m})" for m in masks[1:])
+    return f"unnest([bucket, {flips}])"
+
+
+def _sign_lsh_topk(spark: SparkSession, sf_dir: str, dim: int,
+                   masks: list[int]) -> DataFrame:
+    """The sign-LSH skeleton: bucket every vector once, fan each query out
+    over the probe buckets ``bucket ^ m`` (``masks`` — masks[0] is 0, the
+    query's own bucket), equi-join onto the corpus buckets, exact-cosine
+    re-rank the candidates.  Probe buckets are distinct, so each
+    (query, neighbor) pair matches at most once — no dedup needed.  Only
+    the tiny broadcast query side fans out; the corpus side is untouched,
+    so every probe count keeps the bucketed-join scale shape (never a
+    cross product)."""
     emb = table(spark, sf_dir, "embeddings")
-    sig = _plane_sig_expr(dim)
-    # fail loudly on a dim mismatch: out-of-range v[i] is NULL (ANSI off),
-    # which would silently collapse every vector into bucket 0 and turn
-    # the bucketed join into an all-pairs cross product.  The guard lives
-    # INSIDE the bucket expression so column pruning can't drop it.
-    bucket_expr = (f"if(size(embedding) >= {dim}, "
-                   f"({sig.replace('v[', 'embedding[')}), "
-                   f"raise_error('embedding narrower than dim={dim}'))")
+    sig = _plane_sig_expr(dim).replace("v[", "embedding[")
     bucketed = emb.select(
         F.col("vec_id"), F.col("embedding"),
-        F.expr(bucket_expr).alias("bucket"),
+        F.expr(_dim_guard(dim, f"({sig})")).alias("bucket"),
         _norm_col("embedding").alias("nrm"))
+    probe = (F.col("bucket") if len(masks) == 1 else F.explode(F.array(
+        F.col("bucket"), *[F.expr(f"bucket ^ {m}") for m in masks[1:]])))
     queries = bucketed.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("a"),
-        F.col("bucket"), F.col("nrm").alias("na"))
+        F.col("nrm").alias("na"), probe.alias("bucket"))
     corpus = bucketed.select(F.col("vec_id").alias("neighbor_id"),
                              F.col("embedding").alias("b"), F.col("bucket"),
                              F.col("nrm").alias("nb"))
-    joined = corpus.join(F.broadcast(queries), "bucket")
-    scored = _with_cosine_pre(joined)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "neighbor_id")
-        .orderBy("query_id", "rank")
-    )
+    return _rank_topk(_with_cosine_pre(
+        corpus.join(F.broadcast(queries), "bucket")))
 
 
-def _lsh_topk_sql() -> str:
+def _sign_lsh_topk_sql(masks: list[int]) -> str:
     """DuckDB mirror: identical signature expression (1-indexed arrays),
-    bit-identical explicit-chain cosine re-rank inside buckets only."""
+    the same probe fan-out, bit-identical explicit-chain cosine re-rank
+    inside the probed buckets only."""
     sig = _plane_sig_expr(EMB_DIM, base=1).replace("v[", "embedding[")
+    q, fan = ("q", "") if len(masks) == 1 else ("q0", f"""
+), q AS (
+  SELECT query_id, a,
+         {_probe_unnest_sql(masks)} AS bucket
+  FROM q0""")
     return f"""
 WITH b AS (
   SELECT vec_id, embedding, ({sig}) AS bucket FROM embeddings
-), q AS (
+), {q} AS (
   SELECT vec_id AS query_id, embedding AS a, bucket FROM b
-  WHERE vec_id < {N_QUERIES}
+  WHERE vec_id < {N_QUERIES}{fan}
 ), scored AS (
   SELECT q.query_id, e.vec_id AS neighbor_id,
          {_cos_sql('q.a', 'e.embedding', EMB_DIM)} AS cos
   FROM b e JOIN q ON e.bucket = q.bucket
-), ranked AS (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cos DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, rank, neighbor_id
-FROM ranked WHERE rank <= {TOP_K}
-ORDER BY query_id, rank
-"""
+{_rank_tail_sql()}"""
 
 
-LSH_TOPK_SQL = _lsh_topk_sql()
+def lsh_cosine_topk(spark: SparkSession, sf_dir: str,
+                    dim: int = EMB_DIM) -> DataFrame:
+    """Single-probe sign-LSH: candidates share the query's hyperplane
+    signature; at 10^9 vectors the bucket join replaces the all-pairs
+    cross product."""
+    return _sign_lsh_topk(spark, sf_dir, dim, _probe_masks(0))
 
-# --- multiprobe sign-LSH (recall path; exact DuckDB oracle) -------------------
+
+LSH_TOPK_SQL = _sign_lsh_topk_sql(_probe_masks(0))
 
 
 def lsh_multiprobe_topk(spark: SparkSession, sf_dir: str,
@@ -215,75 +301,13 @@ def lsh_multiprobe_topk(spark: SparkSession, sf_dir: str,
     the other side of ONE hyperplane is recovered at the cost of 9 bucket
     probes instead of 1 — still a bucketed equi-join (query side explodes
     9×, corpus side untouched), never a cross product, so the scale shape
-    is identical to ``lsh_cosine_topk``.  Probe buckets are distinct, so
-    each (query, neighbor) pair matches at most once — no dedup needed.
-    Recall vs exact cosine_topk is pinned in tests/test_ann_quality.py.
+    is identical to ``lsh_cosine_topk``.  Recall vs exact cosine_topk is
+    pinned in tests/test_ann_quality.py.
     """
-    emb = table(spark, sf_dir, "embeddings")
-    sig = _plane_sig_expr(dim)
-    bucket_expr = (f"if(size(embedding) >= {dim}, "
-                   f"({sig.replace('v[', 'embedding[')}), "
-                   f"raise_error('embedding narrower than dim={dim}'))")
-    bucketed = emb.select(
-        F.col("vec_id"), F.col("embedding"),
-        F.expr(bucket_expr).alias("bucket"),
-        _norm_col("embedding").alias("nrm"))
-    probes = F.array(
-        F.col("bucket"),
-        *[F.expr(f"bucket ^ {1 << p}") for p in range(N_PLANES)])
-    queries = (
-        bucketed.filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("a"),
-                F.col("nrm").alias("na"),
-                F.explode(probes).alias("bucket"))
-    )
-    corpus = bucketed.select(F.col("vec_id").alias("neighbor_id"),
-                             F.col("embedding").alias("b"), F.col("bucket"),
-                             F.col("nrm").alias("nb"))
-    joined = corpus.join(F.broadcast(queries), "bucket")
-    scored = _with_cosine_pre(joined)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "neighbor_id")
-        .orderBy("query_id", "rank")
-    )
+    return _sign_lsh_topk(spark, sf_dir, dim, _probe_masks(1))
 
 
-def _multiprobe_topk_sql() -> str:
-    sig = _plane_sig_expr(EMB_DIM, base=1).replace("v[", "embedding[")
-    flips = ", ".join(
-        f"xor(bucket, {1 << p})" for p in range(N_PLANES))
-    return f"""
-WITH b AS (
-  SELECT vec_id, embedding, ({sig}) AS bucket FROM embeddings
-), q0 AS (
-  SELECT vec_id AS query_id, embedding AS a, bucket FROM b
-  WHERE vec_id < {N_QUERIES}
-), q AS (
-  SELECT query_id, a,
-         unnest([bucket, {flips}]) AS bucket
-  FROM q0
-), scored AS (
-  SELECT q.query_id, e.vec_id AS neighbor_id,
-         {_cos_sql('q.a', 'e.embedding', EMB_DIM)} AS cos
-  FROM b e JOIN q ON e.bucket = q.bucket
-), ranked AS (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cos DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, rank, neighbor_id
-FROM ranked WHERE rank <= {TOP_K}
-ORDER BY query_id, rank
-"""
-
-
-MULTIPROBE_TOPK_SQL = _multiprobe_topk_sql()
+MULTIPROBE_TOPK_SQL = _sign_lsh_topk_sql(_probe_masks(1))
 
 # --- band-OR amplification (L independent tables; exact DuckDB oracle) --------
 
@@ -321,16 +345,6 @@ def _table_sig_expr(t: int, dim: int, var: str = "c{j}",
     return " + ".join(bits)
 
 
-def _probe_masks() -> list[int]:
-    """Hamming-≤2 probe set: the bucket itself, the 8 one-bit flips, and
-    the 28 two-bit flips — 37 probes per (query, table)."""
-    from itertools import combinations
-
-    return ([0] + [1 << p for p in range(N_PLANES)]
-            + [(1 << a) | (1 << b)
-               for a, b in combinations(range(N_PLANES), 2)])
-
-
 def _banded_buckets(emb: DataFrame, dim: int) -> DataFrame:
     """(vec_id, embedding) -> (vec_id, t, bucket): one row per vector per
     band-OR signature table.  Two projection layers keep four signatures
@@ -340,19 +354,16 @@ def _banded_buckets(emb: DataFrame, dim: int) -> DataFrame:
     2's sig chains then reference those locals with +-1 literals;
     inlining cast(embedding[i] as double) per term generated 512
     cast+multiply statements and knocked the whole stage out of codegen.
-    The dim guard (see lsh_cosine_topk) rides the cast: out-of-range v[i]
+    The dim guard (``_dim_guard``) rides the cast: out-of-range v[i]
     is NULL, which would silently funnel everything into bucket 0.
     Shared by band-OR ANN probing and embedding near-dup pair generation,
     which makes the "same signature tables" invariant structural."""
     step = max(1, dim // 16)
     coords = list(range(0, dim, step))
-    guard = (f"if(size(embedding) >= {dim}, "
-             f"cast(embedding[{{i}}] as double), "
-             f"raise_error('embedding narrower than dim={dim}'))")
     withc = emb.select(
         "vec_id", "embedding",
-        *[F.expr(guard.format(i=i)).alias(f"c{j}")
-          for j, i in enumerate(coords)])
+        *[F.expr(_dim_guard(dim, f"cast(embedding[{i}] as double)"))
+          .alias(f"c{j}") for j, i in enumerate(coords)])
     withb = withc.select(
         "vec_id",
         *[F.expr(f"({_table_sig_expr(t, dim)})").alias(f"b{t}")
@@ -391,7 +402,7 @@ def lsh_bandor_topk(spark: SparkSession, sf_dir: str,
     stacked = _banded_buckets(emb, dim)
     corpus = stacked.select(F.col("vec_id").alias("neighbor_id"),
                             "t", "bucket")
-    probes = F.array(*[F.expr(f"bucket ^ {m}") for m in _probe_masks()])
+    probes = F.array(*[F.expr(f"bucket ^ {m}") for m in _probe_masks(2)])
     queries = (
         stacked.filter(F.col("vec_id") < N_QUERIES)
         .select(F.col("vec_id").alias("query_id"), "t",
@@ -399,42 +410,34 @@ def lsh_bandor_topk(spark: SparkSession, sf_dir: str,
     )
     cand = (corpus.join(F.broadcast(queries), ["t", "bucket"])
             .select("query_id", "neighbor_id").distinct())
-    qe = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("a"),
-        _norm_col("embedding").alias("na"))
-    ne = emb.select(F.col("vec_id").alias("neighbor_id"),
-                    F.col("embedding").alias("b"),
-                    _norm_col("embedding").alias("nb"))
-    scored = _with_cosine_pre(
-        cand.join(F.broadcast(qe), "query_id").join(ne, "neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "neighbor_id")
-        .orderBy("query_id", "rank")
-    )
+    return _rank_topk(_verify(cand, F.broadcast(_queries(emb)),
+                              _corpus(emb)))
 
 
-def _bandor_topk_sql() -> str:
-    """DuckDB mirror: identical per-table signatures (1-indexed arrays),
-    UNION ALL stacking, xor probe expansion, distinct candidate pairs,
-    bit-identical explicit-chain cosine re-rank."""
+def _banded_sql() -> str:
+    """Oracle head shared by band-OR and embedding near-dup: identical
+    per-table signatures (1-indexed arrays) in ``b``, UNION ALL stacking
+    into one (vec_id, t, bucket) row per table in ``stacked``."""
     sigs = ", ".join(
         f"({_table_sig_expr(t, EMB_DIM, var='cast(embedding[{i}] as double)', base=1)})"
         f" AS b{t}" for t in range(L_TABLES))
     stacked = " UNION ALL ".join(
         f"SELECT vec_id, {t} AS t, b{t} AS bucket FROM b"
         for t in range(L_TABLES))
-    probes = ", ".join(f"xor(bucket, {m})" for m in _probe_masks()[1:])
     return f"""
 WITH b AS (
   SELECT vec_id, embedding, {sigs} FROM embeddings
 ), stacked AS ({stacked}),
-q AS (
+"""
+
+
+def _bandor_topk_sql() -> str:
+    """DuckDB mirror: the shared banded head, xor probe expansion,
+    distinct candidate pairs, bit-identical explicit-chain cosine
+    re-rank."""
+    return f"""{_banded_sql()}q AS (
   SELECT vec_id AS query_id, t,
-         unnest([bucket, {probes}]) AS bucket
+         {_probe_unnest_sql(_probe_masks(2))} AS bucket
   FROM stacked WHERE vec_id < {N_QUERIES}
 ), cand AS (
   SELECT DISTINCT q.query_id, e.vec_id AS neighbor_id
@@ -445,16 +448,7 @@ q AS (
   FROM cand c
   JOIN embeddings qe ON qe.vec_id = c.query_id
   JOIN embeddings ne ON ne.vec_id = c.neighbor_id
-), ranked AS (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cos DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, rank, neighbor_id
-FROM ranked WHERE rank <= {TOP_K}
-ORDER BY query_id, rank
-"""
+{_rank_tail_sql()}"""
 
 
 BANDOR_TOPK_SQL = _bandor_topk_sql()
@@ -488,9 +482,10 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str,
     signature band — the SAME md5-seeded tables ann_bandor_topk probes, so
     at scale the bucketed artifact is shared between dedup and ANN);
     within each (band, bucket) the i<j pairs are generated by the
-    single-lineage bucket-grouping pattern of ``ops.dedup._band_pairs`` —
-    group to a sorted vec_id array, expand with array lambdas — so there
-    is NO self-join and the signature projection runs exactly once.
+    single-lineage bucket-grouping pattern ``ops.dedup._band_pairs``
+    shares — group to a sorted vec_id array, expand in-row
+    (``common.sorted_id_pairs``) — so there is NO self-join and the
+    signature projection runs exactly once.
     Quadratic work is confined to colliding buckets and capped
     (EMB_BUCKET_CAP) against degenerate buckets.  Candidate pairs then
     re-rank by exact cosine via two equi-joins back to the corpus.
@@ -516,22 +511,9 @@ def embedding_near_dup_df(emb: DataFrame, dim: int = EMB_DIM,
         .agg(F.array_sort(F.collect_set("vec_id")).alias("vs"))
         .filter((F.size("vs") >= 2) & (F.size("vs") <= EMB_BUCKET_CAP))
     )
-    pair_expr = (
-        "flatten(transform(vs, (x, i) -> "
-        "transform(slice(vs, i + 2, size(vs)), "
-        "y -> struct(x AS vec_a, y AS vec_b))))")
-    pairs = (
-        buckets.select(F.explode(F.expr(pair_expr)).alias("p"))
-        .select("p.vec_a", "p.vec_b")
-        .distinct()
-    )
-    ea = emb.select(F.col("vec_id").alias("vec_a"),
-                    F.col("embedding").alias("a"),
-                    _norm_col("embedding").alias("na"))
-    eb = emb.select(F.col("vec_id").alias("vec_b"),
-                    F.col("embedding").alias("b"),
-                    _norm_col("embedding").alias("nb"))
-    scored = _with_cosine_pre(pairs.join(ea, "vec_a").join(eb, "vec_b"))
+    pairs = sorted_id_pairs(buckets, "vs", "vec_a", "vec_b").distinct()
+    scored = _verify(pairs, _side(emb, "vec_a", "a", "na"),
+                     _side(emb, "vec_b", "b", "nb"))
     cos6 = F.round(F.col("cos"), 6)
     return (
         scored.select(
@@ -550,18 +532,8 @@ def _embedding_dedup_sql(threshold: float = EMB_DUP_THRESHOLD) -> str:
     generate the oracle for a non-default threshold from here so the pair
     can never silently diverge (the module-level EMBEDDING_DEDUP_SQL is
     this function at the default, matching the gate entry)."""
-    sigs = ", ".join(
-        f"({_table_sig_expr(t, EMB_DIM, var='cast(embedding[{i}] as double)', base=1)})"
-        f" AS b{t}" for t in range(L_TABLES))
-    stacked = " UNION ALL ".join(
-        f"SELECT vec_id, {t} AS t, b{t} AS bucket FROM b"
-        for t in range(L_TABLES))
     cos = _cos_sql("ea.embedding", "eb.embedding", EMB_DIM)
-    return f"""
-WITH b AS (
-  SELECT vec_id, embedding, {sigs} FROM embeddings
-), stacked AS ({stacked}),
-bsz AS (
+    return f"""{_banded_sql()}bsz AS (
   SELECT t, bucket FROM stacked GROUP BY 1, 2
   HAVING count(*) BETWEEN 2 AND {EMB_BUCKET_CAP}
 ),
@@ -605,23 +577,11 @@ IVF_REPLICAS = 2      # lists each corpus vector is indexed in (r6:
 IVF_FIRST = N_QUERIES
 
 
-def _cos_over(x: str, y: str) -> str:
-    """The _with_cosine formula as a SQL snippet over arbitrary operands,
-    for use inside higher-order lambdas — the SAME zip_with/aggregate fold
-    and association (dot / (norm_x * norm_y)), so cosines stay
-    bit-identical to the column form and to the oracle's explicit chains."""
-    dot = (f"aggregate(zip_with({x}, {y}, (p, q) -> cast(p as double) * "
-           f"cast(q as double)), 0D, (acc, v) -> acc + v)")
-    nx = (f"sqrt(aggregate({x}, 0D, (acc, v) -> acc + cast(v as double) * "
-          f"cast(v as double)))")
-    ny = (f"sqrt(aggregate({y}, 0D, (acc, v) -> acc + cast(v as double) * "
-          f"cast(v as double)))")
-    return f"({dot} / ({nx} * {ny}))"
-
-
 def _dot_over(x: str, y: str) -> str:
-    """The dot-product fold of ``_cos_over`` alone — for call sites that
-    divide by precomputed norms instead (same fold, same values)."""
+    """The ``_DOT`` fold as a SQL snippet over arbitrary operands, for use
+    inside higher-order lambdas — the SAME zip_with/aggregate fold, so
+    dot / (precomputed norms) stays bit-identical to the column form and
+    to the oracle's explicit chains."""
     return (f"aggregate(zip_with({x}, {y}, (p, q) -> cast(p as double) * "
             f"cast(q as double)), 0D, (acc, v) -> acc + v)")
 
@@ -711,92 +671,85 @@ def _refine_centroids(corpus: DataFrame, cents: DataFrame,
                 " / n)").alias("b")))
 
 
+def _quantizer(emb: DataFrame, k: int = IVF_K,
+               train_limit: int | None = None
+               ) -> tuple[DataFrame, DataFrame]:
+    """The coarse quantizer ``ivf_topk`` probes and ``semdedup_df`` cells
+    with: (corpus, cents) — the (neighbor_id, a) corpus projection and
+    the ``k`` fixed-id seed centroids sharpened by one Lloyd iteration
+    (see _refine_centroids), as (centroid_id, b).  One Lloyd iteration
+    moves the seeds from arbitrary corpus points to the means of their
+    lists, near cluster centers, lifting recall at fixed nprobe.  The
+    (k-row) centroid table is localCheckpointed: it is broadcast twice
+    downstream (assignment + probes / cell cosines), and without the
+    checkpoint each broadcast would re-run the whole training lineage."""
+    cents = emb.filter(
+        (F.col("vec_id") >= IVF_FIRST)
+        & (F.col("vec_id") < IVF_FIRST + int(k))).select(
+        F.col("vec_id").alias("centroid_id"),
+        F.col("embedding").alias("b"))
+    corpus = emb.select(F.col("vec_id").alias("neighbor_id"),
+                        F.col("embedding").alias("a"))
+    return corpus, \
+        _refine_centroids(corpus, cents, train_limit).localCheckpoint()
+
+
 def ivf_topk(spark: SparkSession, sf_dir: str,
-             nprobe: int = IVF_NPROBE, lloyd: bool = True,
+             nprobe: int = IVF_NPROBE,
              train_limit: int | None = None,
              assign_replicas: int = IVF_REPLICAS) -> DataFrame:
-    """IVF ANN top-k — the third scale path besides sign-LSH bucketing and
-    band-OR: a coarse quantizer assigns every corpus vector to its nearest
-    of IVF_K centroids (one partial-aggregated shuffle of corpus size: the
-    16 candidate rows per vector collapse map-side via max(struct)), each
-    query probes its ``nprobe`` nearest centroid lists, and exact cosine
-    re-ranks only vectors in probed lists.
+    """IVF ANN top-k — the probed-quantizer candidate generator: a coarse
+    quantizer (``_quantizer``) indexes every corpus vector in its nearest
+    centroid lists, each query probes its ``nprobe`` nearest lists, and
+    exact cosine re-ranks only vectors in probed lists.
 
     ``nprobe`` is the recall dial (default IVF_NPROBE=4, the gate entry's
     fixed config): work scales ~linearly with it while recall rises toward
     exact — at nprobe=IVF_K every list is probed, candidates = the whole
     corpus, and the result IS the brute-force top-k.  The recall-vs-nprobe
-    curve is pinned in tests/test_ann_quality.py; generate a matching
-    oracle for a non-default setting with ``_ivf_topk_sql(nprobe=...)``.
+    curve is pinned in tests/test_ann_quality.py.
 
     ``assign_replicas`` (default IVF_REPLICAS=2) indexes each corpus
     vector in its R nearest lists (IVF multi-assignment): index size and
     candidate count scale ~linearly with R while recall at FIXED nprobe
     jumps — measured recall@5 at nprobe=4: 0.56/0.76/0.88 at sf0.01 and
     0.76/0.88/0.96 at sf0.001 for R=1/2/3.  The r6 default R=2 is the
-    knee.  Assignment itself is zero-shuffle regardless of R (in-row
-    top-R against the broadcast centroid array, see _ivf_assign), so R
-    does not add an exchange — only candidate-join rows.
+    knee.
 
-    ``lloyd`` (default True) runs one deterministic Lloyd iteration over
-    the fixed-id seed centroids before assignment (see
-    _refine_centroids); ``lloyd=False`` keeps the raw seed quantizer.
-    More iterations were measured and rejected (see _refine_centroids).
     ``train_limit`` bounds the Lloyd training set to the deterministic
     prefix sample vec_id < train_limit (the production shape at corpus
     sizes where full-corpus training is wasteful; assignment, probing,
-    and re-rank still cover the whole corpus).  Every setting has an
-    exact generated oracle (``_ivf_topk_sql(nprobe=..., lloyd=...,
-    train_limit=...)``).
+    and re-rank still cover the whole corpus).  More Lloyd iterations
+    were measured and rejected (see _refine_centroids).  Every setting
+    has an exact generated oracle (``_ivf_topk_sql(nprobe=...,
+    train_limit=..., assign_replicas=...)``).
+
+    Shuffles: assignment has none — an in-row top-R against the broadcast
+    centroid array (see _ivf_assign), whatever R is.  The exchanges left
+    are candidate-sized or smaller: the centroid collect, the probe
+    window, the multi-assignment distinct, the re-rank window and the
+    output sort (plan-locked in tests/test_plans.py).
 
     Ranking determinism across engines: assignment and probe order are
-    (cos DESC, centroid_id ASC); Spark expresses that as
-    max(struct(cos, -centroid_id)) — lexicographic struct max picks the
-    larger cosine, ties the smaller centroid_id — over bit-identical
-    cosines (aggregate/zip_with fold ≡ the oracle's explicit chain), so
-    both engines derive identical lists.  Recall@5 vs brute force is
-    pinned in tests/test_ann_quality.py.
+    (cos DESC, centroid_id ASC) — in-row as an ascending sort on
+    (-cos, centroid_id) structs, at the probe as a row_number window —
+    over bit-identical cosines (aggregate/zip_with fold ≡ the oracle's
+    explicit chain), so both engines derive identical lists.  Recall@5
+    vs brute force is pinned in tests/test_ann_quality.py.
 
-    Same in-expression dim guard as the other ANN operators: a
-    narrower-than-dim embedding would NULL-pad every cosine it touches
-    (zip_with), and NULL cos ranks as confident garbage -- fail loudly
-    instead.
+    Same in-expression dim guard as the other ANN operators
+    (``_dim_guard``).
     """
-    dim = EMB_DIM
-    guard = (f"if(size(embedding) >= {dim}, embedding, "
-             f"raise_error('embedding narrower than dim={dim}'))")
-    emb = table(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.expr(guard))
-    cents = emb.filter(
-        (F.col("vec_id") >= IVF_FIRST)
-        & (F.col("vec_id") < IVF_FIRST + IVF_K)).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("b"))
-    corpus = emb.select(F.col("vec_id").alias("neighbor_id"),
-                        F.col("embedding").alias("a"))
-    if lloyd:
-        # one Lloyd iteration sharpens the fixed-id seed quantizer: means
-        # of the seed-assigned lists sit near cluster centers instead of
-        # at arbitrary corpus points, lifting recall at fixed nprobe.
-        # localCheckpoint the (16-row) result: it is broadcast twice below
-        # (assignment + probes), and without the checkpoint each broadcast
-        # would re-run the whole training lineage
-        cents = _refine_centroids(corpus, cents, train_limit) \
-            .localCheckpoint()
+    emb = _guarded(spark, sf_dir)
+    corpus, cents = _quantizer(emb, train_limit=train_limit)
     # assignment: in-row top-R against the broadcast centroid array —
     # zero shuffle (see _ivf_assign); R = assign_replicas lists per vector
     assigned = _ivf_assign(corpus, cents, assign_replicas)
-    # query probes: nearest IVF_NPROBE centroids per query (tiny)
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("a"),
-        _norm_col("embedding").alias("na"))
-    probe_scored = _with_cosine_pre(queries.crossJoin(F.broadcast(
-        cents.withColumn("nb", _norm_col("b")))))
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("centroid_id"))
-    probes = (probe_scored.withColumn("pr", F.row_number().over(w_probe))
-              .filter(F.col("pr") <= nprobe)
-              .select("query_id", "centroid_id"))
+    # query probes: nearest nprobe centroids per query (tiny)
+    probes = _top_per_query(
+        _with_cosine_pre(_queries(emb).crossJoin(F.broadcast(
+            cents.withColumn("nb", _norm_col("b"))))),
+        "centroid_id", nprobe, "pr")
     # candidates: corpus vectors whose list is probed; exact re-rank.
     # With multi-assignment a vector can surface through several probed
     # lists — dedup then (replicas=1 cannot duplicate, skip the exchange)
@@ -804,48 +757,43 @@ def ivf_topk(spark: SparkSession, sf_dir: str,
         .select("query_id", "neighbor_id")
     if assign_replicas > 1:
         cand = cand.distinct()
-    ne = emb.select(F.col("vec_id").alias("neighbor_id"),
-                    F.col("embedding").alias("b"),
-                    _norm_col("embedding").alias("nb"))
-    scored = _with_cosine_pre(
-        cand.join(F.broadcast(queries), "query_id").join(ne, "neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "neighbor_id")
-        .orderBy("query_id", "rank")
-    )
+    return _rank_topk(_verify(cand, F.broadcast(_queries(emb)),
+                              _corpus(emb)))
 
 
-def _cents_cte(lloyd: bool = True, train_limit: int | None = None) -> str:
-    """The shared coarse-quantizer CTE block (``cents`` = seed centroids,
-    optionally sharpened by the one Lloyd iteration) — factored out so the
-    IVF oracles and the SemDedup oracle derive their clustering from the
+def _assign_cte_sql(name: str, cents: str, keep: str,
+                    tail: str = "") -> str:
+    """Oracle assignment CTE ``name``: every embeddings row's centroids
+    from ``cents`` ranked rn = 1, 2, … by (cos DESC, centroid_id ASC),
+    kept where ``keep`` (a predicate on rn) holds; ``tail`` follows the
+    cross join's ``cents`` alias verbatim."""
+    cos = _cos_sql("e.embedding", "c.embedding", EMB_DIM)
+    return f"""{name} AS (
+  SELECT neighbor_id, centroid_id FROM (
+    SELECT e.vec_id AS neighbor_id, c.centroid_id,
+           row_number() OVER (PARTITION BY e.vec_id
+                              ORDER BY {cos} DESC, c.centroid_id ASC)
+             AS rn
+    FROM embeddings e CROSS JOIN {cents} c{tail}
+  ) WHERE {keep}"""
+
+
+def _cents_cte(train_limit: int | None = None) -> str:
+    """The shared coarse-quantizer CTE block (``cents`` = seed centroids
+    sharpened by the one Lloyd iteration) — factored out so the IVF
+    oracles and the SemDedup oracle derive their clustering from the
     byte-identical SQL text that the Spark side's _refine_centroids /
     _ivf_assign pair is proven exact against."""
-    seed = f"""
-  SELECT vec_id AS centroid_id, embedding FROM embeddings
-  WHERE vec_id >= {IVF_FIRST} AND vec_id < {IVF_FIRST + IVF_K}"""
-    if not lloyd:
-        return f"cents AS ({seed}\n)"
-    cos_ac0 = _cos_sql("e.embedding", "c.embedding", EMB_DIM)
     # one Lloyd iteration, folded in the exact order Spark folds:
     # per-(centroid, coordinate) left-to-right sum over vec_id-sorted
     # values (list_reduce has no seed; 0D + x == x exactly), then a
     # single double/bigint division per coordinate
     train = (f"WHERE e.vec_id < {train_limit}"
              if train_limit is not None else "")
-    return f"""cents0 AS ({seed}
-), assigned0 AS (
-  SELECT neighbor_id, centroid_id FROM (
-    SELECT e.vec_id AS neighbor_id, c.centroid_id,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {cos_ac0} DESC, c.centroid_id ASC)
-             AS rn
-    FROM embeddings e CROSS JOIN cents0 c {train}
-  ) WHERE rn = 1
+    return f"""cents0 AS (
+  SELECT vec_id AS centroid_id, embedding FROM embeddings
+  WHERE vec_id >= {IVF_FIRST} AND vec_id < {IVF_FIRST + IVF_K}
+), {_assign_cte_sql("assigned0", "cents0", "rn = 1", f" {train}")}
 ), positions AS (
   SELECT UNNEST(range(1, {EMB_DIM + 1})) AS pos
 ), coord_sums AS (
@@ -863,22 +811,22 @@ def _cents_cte(lloyd: bool = True, train_limit: int | None = None) -> str:
 )"""
 
 
-def _ivf_topk_sql(nprobe: int = IVF_NPROBE, lloyd: bool = True,
+def _ivf_topk_sql(nprobe: int = IVF_NPROBE,
                   train_limit: int | None = None,
                   assign_replicas: int = IVF_REPLICAS) -> str:
-    cos_ac = _cos_sql("e.embedding", "c.embedding", EMB_DIM)
     cos_qc = _cos_sql("q.embedding", "c.embedding", EMB_DIM)
     cos_qn = _cos_sql("qe.embedding", "ne.embedding", EMB_DIM)
-    cents = _cents_cte(lloyd, train_limit)
+    assigned = _assign_cte_sql("assigned", "cents",
+                               f"rn <= {assign_replicas}")
+    ranked = f"""SELECT c.query_id, c.neighbor_id,
+         row_number() OVER (PARTITION BY c.query_id
+                            ORDER BY {cos_qn} DESC, c.neighbor_id ASC)
+           AS rank
+  FROM cand c
+  JOIN embeddings qe ON qe.vec_id = c.query_id
+  JOIN embeddings ne ON ne.vec_id = c.neighbor_id"""
     return f"""
-WITH {cents}, assigned AS (
-  SELECT neighbor_id, centroid_id FROM (
-    SELECT e.vec_id AS neighbor_id, c.centroid_id,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {cos_ac} DESC, c.centroid_id ASC)
-             AS rn
-    FROM embeddings e CROSS JOIN cents c
-  ) WHERE rn <= {assign_replicas}
+WITH {_cents_cte(train_limit)}, {assigned}
 ), probes AS (
   SELECT query_id, centroid_id FROM (
     SELECT q.vec_id AS query_id, c.centroid_id,
@@ -891,19 +839,7 @@ WITH {cents}, assigned AS (
 ), cand AS (
   SELECT {"DISTINCT " if assign_replicas > 1 else ""}p.query_id, a.neighbor_id
   FROM assigned a JOIN probes p ON p.centroid_id = a.centroid_id
-), ranked AS (
-  SELECT c.query_id, c.neighbor_id,
-         row_number() OVER (PARTITION BY c.query_id
-                            ORDER BY {cos_qn} DESC, c.neighbor_id ASC)
-           AS rank
-  FROM cand c
-  JOIN embeddings qe ON qe.vec_id = c.query_id
-  JOIN embeddings ne ON ne.vec_id = c.neighbor_id
-)
-SELECT query_id, rank, neighbor_id
-FROM ranked WHERE rank <= {TOP_K}
-ORDER BY query_id, rank
-"""
+{_rank_tail_sql(ranked)}"""
 
 
 IVF_TOPK_SQL = _ivf_topk_sql()
@@ -955,12 +891,7 @@ def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector SemDedup verdict over the embeddings table: cluster id,
     centroid similarity, above-ε cluster-neighbor count, and the drop flag.
     """
-    dim = EMB_DIM
-    guard = (f"if(size(embedding) >= {dim}, embedding, "
-             f"raise_error('embedding narrower than dim={dim}'))")
-    emb = table(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.expr(guard))
-    return semdedup_df(emb)
+    return semdedup_df(_guarded(spark, sf_dir))
 
 
 def sem_k_for(n: int) -> int:
@@ -1000,11 +931,7 @@ def semdedup_scaled(spark: SparkSession, sf_dir: str,
     (pinned: the planted-duplicate semantics hold under a wider quantizer,
     tests/test_semdedup.py).
     """
-    dim = EMB_DIM
-    guard = (f"if(size(embedding) >= {dim}, embedding, "
-             f"raise_error('embedding narrower than dim={dim}'))")
-    emb = table(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.expr(guard))
+    emb = _guarded(spark, sf_dir)
     return semdedup_df(emb, threshold, k=sem_k_for(emb.count()))
 
 
@@ -1031,14 +958,7 @@ def semdedup_df(emb: DataFrame,
     at real scale that is the persisted "index" artifact shared with
     ann_ivf_topk.
     """
-    cents = emb.filter(
-        (F.col("vec_id") >= IVF_FIRST)
-        & (F.col("vec_id") < IVF_FIRST + int(k))).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("b"))
-    corpus = emb.select(F.col("vec_id").alias("neighbor_id"),
-                        F.col("embedding").alias("a"))
-    cents = _refine_centroids(corpus, cents).localCheckpoint()
+    corpus, cents = _quantizer(emb, k)
     assigned = _ivf_assign(corpus, cents, 1)
     cc = _with_cosine_pre(
         assigned.join(corpus.withColumn("na", _norm_col("a")),
@@ -1048,30 +968,20 @@ def semdedup_df(emb: DataFrame,
         F.col("neighbor_id").alias("vec_id"), "centroid_id",
         F.round(F.col("cos"), 6).alias("cent_cos")).localCheckpoint()
     # within-cell candidate pairs via the single-lineage grouping pattern
-    # (ops.dedup._band_pairs / embedding_near_dup): sorted vec_id array per
-    # cell, i<j expansion with array lambdas — no self-join, the assignment
-    # runs exactly once.  replicas=1 ⇒ a pair can only arise in one cell.
+    # (common.sorted_id_pairs, as in ops.dedup._band_pairs and
+    # embedding_near_dup): sorted vec_id array per cell, in-row i<j
+    # expansion — no self-join, the assignment runs exactly once.
+    # replicas=1 ⇒ a pair can only arise in one cell.
     cells = (cc.groupBy("centroid_id")
              .agg(F.array_sort(F.collect_set("vec_id")).alias("vs"))
              .filter(F.size("vs") >= 2))
-    pair_expr = (
-        "flatten(transform(vs, (x, i) -> "
-        "transform(slice(vs, i + 2, size(vs)), "
-        "y -> struct(x AS vec_a, y AS vec_b))))")
-    ea = emb.select(F.col("vec_id").alias("vec_a"),
-                    F.col("embedding").alias("a"),
-                    _norm_col("embedding").alias("na"))
-    eb = emb.select(F.col("vec_id").alias("vec_b"),
-                    F.col("embedding").alias("b"),
-                    _norm_col("embedding").alias("nb"))
     # the verified dup-pair set is tiny (threshold tail of within-cell
     # pairs); materialize it once — its lineage otherwise replays the
     # explode + two corpus joins for each of the union sides below
     pairs = (
-        _with_cosine_pre(
-            cells.select(F.explode(F.expr(pair_expr)).alias("p"))
-            .select("p.vec_a", "p.vec_b")
-            .join(ea, "vec_a").join(eb, "vec_b"))
+        _verify(sorted_id_pairs(cells, "vs", "vec_a", "vec_b"),
+                _side(emb, "vec_a", "a", "na"),
+                _side(emb, "vec_b", "b", "nb"))
         .filter(F.round(F.col("cos"), 6) >= threshold)
         .select("vec_a", "vec_b")).localCheckpoint()
     adj = pairs.select(F.col("vec_a").alias("vec_id"),
@@ -1104,13 +1014,12 @@ def semdedup_df(emb: DataFrame,
 
 def _semdedup_sql(threshold: float = SEM_DUP_THRESHOLD) -> str:
     """DuckDB mirror: the shared quantizer CTE (_cents_cte — byte-identical
-    to the IVF oracles'), rn=1 assignment, cell self-join for pairs with
+    to the IVF oracles'), rn=1 assignment (_assign_cte_sql), cell self-join for pairs with
     the identical rounded-cosine threshold, and the same lexicographic
     (cent_cos, vec_id) drop rule.  ``threshold`` is the SAME parameter
     ``semdedup_df`` takes, so operator and oracle cannot silently diverge.
     """
     cos_ac = _cos_sql("e.embedding", "c.embedding", EMB_DIM)
-    cos_ec = _cos_sql("e.embedding", "c.embedding", EMB_DIM)
     cos_ab = _cos_sql("ea.embedding", "eb.embedding", EMB_DIM)
     # cc is referenced four times (both pair sides, both priority sides,
     # final output) and itself references the quantizer twice; DuckDB
@@ -1119,17 +1028,10 @@ def _semdedup_sql(threshold: float = SEM_DUP_THRESHOLD) -> str:
     # MATERIALIZED pins each to one evaluation — the oracle analogue of the
     # Spark side's localCheckpoint on the same tables.
     return f"""
-WITH {_cents_cte()}, assigned AS (
-  SELECT neighbor_id, centroid_id FROM (
-    SELECT e.vec_id AS neighbor_id, c.centroid_id,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {cos_ac} DESC, c.centroid_id ASC)
-             AS rn
-    FROM embeddings e CROSS JOIN cents c
-  ) WHERE rn = 1
+WITH {_cents_cte()}, {_assign_cte_sql("assigned", "cents", "rn = 1")}
 ), cc AS MATERIALIZED (
   SELECT a.neighbor_id AS vec_id, a.centroid_id,
-         round({cos_ec}, 6) AS cent_cos
+         round({cos_ac}, 6) AS cent_cos
   FROM assigned a
   JOIN embeddings e ON e.vec_id = a.neighbor_id
   JOIN cents c ON c.centroid_id = a.centroid_id
